@@ -42,7 +42,7 @@ object GraftTable {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Declared stat columns: name → long-valued ordinal expression (see
-    * `computeStats`); one alias so the four write-path signatures that
+    * `indexDataDir`); one alias so the four write-path signatures that
     * accept it cannot drift. */
   type StatsCols =
     Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)]
@@ -843,14 +843,6 @@ object GraftTable {
   final case class RangeBand(col: String, lo: Long, hi: Long) extends Band
   final case class NullBand(col: String, isNull: Boolean) extends Band
 
-  /** Largest per-file row count recorded in a just-computed stats
-    * pass — computeStats counts every row of every written file, so
-    * this is exactly the quantity buildBloomSidecar's own counting job
-    * would re-derive over the same dir (r22: passed through to skip
-    * that job on stats+bloom commits). */
-  private def maxRowsOf(st: Option[TableStats]): Option[Long] =
-    st.flatMap(_.files.map(_.rows).maxOption)
-
   final case class TableStats(cols: Seq[String], files: Seq[FileStats]) {
     /** One-line encoding for the stats= commit header:
       * `c1,c2;f|rows|min1|max1|min2|max2|null1|null2;...` — file names
@@ -959,93 +951,285 @@ object GraftTable {
     }
   }
 
-  /** Compute per-file (rows, min/max) stats over a just-written data
-    * dir. `statsCols` maps column name → long-valued Column (the
-    * ordinal encoding above). One grouped pass over the written files —
-    * at write time the files are hot, and this replaces the
-    * per-READ listing+footer pass with a once-per-commit cost, exactly
-    * the trade the transaction-log formats make. */
-  private def computeStats(spark: SparkSession, dataPath: String,
-      statsCols: StatsCols): TableStats = {
-    import org.apache.spark.sql.functions._
-    val df = spark.read.parquet(dataPath)
-    // the declared ordinal must land as a LONG whatever width the
-    // caller's expression returns (an int32 stat column would otherwise
-    // surface Integer rows here) — the cast is exact for any integral
-    val aggs = statsCols.flatMap { case (name, ord) =>
-      val l = ord(col(name)).cast(org.apache.spark.sql.types.LongType)
-      // null count = rows − non-null count OF THE ORDINAL — the value
-      // the band predicates actually test (an ordinal expression maps
-      // null to null, so this matches the column for every declared
-      // encoding in the suite)
-      Seq(min(l).as(s"__min_$name"), max(l).as(s"__max_$name"),
-        count(l).as(s"__cnt_$name"))
+  // ---- write-time index pass: per-file stats + Bloom sidecar ---------------
+
+  /** Index a just-written data dir in ONE Spark job: the per-file stats
+    * line for `statsCols` (rows, ordinal min/max, null counts — the
+    * data-skipping index above) and the Bloom sidecar for `bloomCols`
+    * (one section per column). Returns the stats (None without
+    * statsCols) and the bloom= header (None without bloomCols).
+    *
+    *  1. DRIVER: list the dir and read each file's parquet FOOTER row
+    *     count (`mapPar`, no Spark job). The listing is the complete
+    *     file set — a zero-row file surfaces in no scan row but IS part
+    *     of the version — and the largest count sizes the filters.
+    *  2. ONE scan bound to the schema just written (no inference job;
+    *     partition discovery kept) projects the file name, the stat
+    *     ordinals and each indexed column's k probe positions; every
+    *     task folds its rows per file into partials (`IndexFold.fold`).
+    *  3. ONE reduce task receives the partials sorted by (section,
+    *     file), ORs together the partials of a file split across scan
+    *     tasks, streams the sidecar out through the temp+rename publish
+    *     and hands back one stats row per file (`IndexFold.reduce`).
+    *
+    * File names are RELATIVE to the data dir and DECODED on both sides:
+    * `input_file_name()` serves a URL-encoded path (a space in a
+    * partition value reads %20) while every consumer of the recorded
+    * names — canonPath matching against the scan's listing, band-read
+    * and Bloom-read path reconstruction, the meta-agg coverage gate —
+    * works in raw on-disk names. A scanned file the listing lacks, or a
+    * file whose scanned rows differ from its footer, fails the pass. */
+  private def indexDataDir(spark: SparkSession, dataPath: String,
+      schema: org.apache.spark.sql.types.StructType, statsCols: StatsCols,
+      bloomCols: Seq[String]): (Option[TableStats], Option[String]) =
+    if (statsCols.isEmpty && bloomCols.isEmpty) (None, None)
+    else {
+      import org.apache.spark.sql.functions._
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val root = new Path(dataPath)
+      val fs = root.getFileSystem(hconf)
+      val dataName = root.getName
+      // (1) the file set as Spark's file index sees it (`_`/`.`-prefixed
+      // names are hidden, `k=v` partition dirs are not), with footer rows
+      def leaves(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+        fs.listStatus(p).toSeq.filterNot { st =>
+          val n = st.getPath.getName
+          (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+        }.flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
+      val files = mapPar(leaves(root))(st =>
+        (IndexFold.relName(st.getPath.toUri.getPath, dataName),
+          footerRowCount(st, hconf))).sortBy(_._1).toArray
+      // m from the LARGEST file at ~12 bits/key (k=4 → ~0.6% false
+      // positives): one skewed file would otherwise saturate toward
+      // opening everything
+      val k = 4
+      val maxRows = math.max(1L, files.map(_._2).maxOption.getOrElse(0L))
+      val m = math.min(1L << 24,
+        math.max(1024L, ((maxRows * 12 + 63) / 64) * 64)).toInt
+      // (2) the declared ordinal lands as a LONG whatever width the
+      // caller's expression returns (the cast is exact for any
+      // integral); positions use the hash `bloomPositions` probes with,
+      // and a null probes nothing
+      val proj = input_file_name() +:
+        (statsCols.map { case (n, ord) =>
+          ord(col(n)).cast(org.apache.spark.sql.types.LongType) } ++
+          bloomCols.flatMap(c => (1 to k).map(s => when(col(c).isNotNull,
+            pmod(xxhash64(col(c), lit(s)), lit(m.toLong))))))
+      val (nStats, nBloom) = (statsCols.size, bloomCols.size)
+      val parts = spark.read.schema(schema).parquet(dataPath)
+        .select(proj: _*).queryExecution.toRdd
+        .mapPartitions(IndexFold.fold(_, dataName, nStats, nBloom, k, m))
+      // (3) the target is qualified on the DRIVER (the task needs no
+      // default-FS context); the conf ships the serializable way
+      val target = fs.makeQualified(new Path(s"$dataPath/$bloomSidecarName"))
+      val publish =
+        if (nBloom == 0) None
+        else Some(IndexFold.Publish(target, new SerializableHadoopConf(hconf),
+          bloomCols.map(urlEnc).toArray, m, k))
+      val stats = parts
+        .repartitionAndSortWithinPartitions(
+          new org.apache.spark.HashPartitioner(1))
+        .mapPartitions(IndexFold.reduce(_, files, nStats, publish))
+        .collect() // one small row per FILE — never data
+      // POST-BUILD READ-BACK GATE: decode the published sidecar and
+      // require exactly the expected shape — one section per indexed
+      // column in declaration order, every data file present in every
+      // section, full-width bit arrays — BEFORE the caller mints a
+      // version whose bloom= header would vouch for it. An incomplete
+      // or torn sidecar is the one defect the probe path cannot detect
+      // (a missing file line reads as "provably absent" = a silent
+      // false negative), so it must be impossible to commit one.
+      publish.foreach(_ => auditBloomSidecar(fs, target, bloomCols, m, k,
+        files.map(_._1).toSet))
+      (if (nStats == 0) None
+       else Some(TableStats(statsCols.map(_._1), stats.toSeq)),
+       if (nBloom == 0) None
+       else Some(bloomHeader(bloomCols.map(c => (c, m, k)))))
     }
-    // key by the path RELATIVE to the data dir, not the basename: a
-    // partitionBy layout reuses one task's part-file name across every
-    // partition subdir, so basenames collide (merging distinct files
-    // into one bogus stats row) and lose the subdir a reader needs to
-    // rebuild the path. The relative path survives both.
-    val dataName = new Path(dataPath).getName
-    val rows = df
-      .groupBy(regexp_replace(input_file_name(),
-        "^.*?/" + java.util.regex.Pattern.quote(dataName) + "/", "")
-        .as("__file"))
-      .agg(count(lit(1)).as("__rows"), aggs: _*)
-      .orderBy("__file")
-      .collect() // one small row per FILE — never data
-    // input_file_name() serves the URL-ENCODED path (a space in a
-    // partition value reads %20) while every consumer of the recorded
-    // names — canonPath matching against the index listing, band-read
-    // path reconstruction, the meta-agg coverage gate — works in RAW
-    // on-disk names: record the DECODED form, or a special-character
-    // partition dir's bands would silently match no planned file.
-    // %XX only — URLDecoder's form-decoding would additionally turn a
-    // literal '+' (legal in a URI path, left as-is by the encoder)
-    // into a space.
-    def dec(str: String): String =
-      try java.net.URLDecoder.decode(str.replace("+", "%2B"),
-        java.nio.charset.StandardCharsets.UTF_8)
-      catch { case _: IllegalArgumentException => str }
-    val covered = rows.toSeq.map { r =>
-        // a file whose stat column is entirely null has NO range: min/
-        // max aggregate to null, and a naive getAs would unbox that to
-        // a fabricated 0. Record the EMPTY range (min=MaxValue,
-        // max=MinValue) instead — it intersects no band, which is
-        // correct (null never matches a band predicate), and a
-        // graft_stats consumer sees an unmistakable sentinel rather
-        // than data that was never there.
-        def longOr(name: String, empty: Long): Long = {
-          val i = r.fieldIndex(name)
-          if (r.isNullAt(i)) empty else r.getLong(i)
+
+  /** The executor-side halves of `indexDataDir`. */
+  private[graft] object IndexFold {
+    /** One file's partial as one scan task saw it. Section -1 carries
+      * the row count and per-stat-column (min, max, non-null count);
+      * section ci carries column ci's set filter words, sparse. */
+    trait Part extends Serializable
+    final case class StatsPart(rows: Long, lo: Array[Long], hi: Array[Long],
+        nonNull: Array[Long]) extends Part
+    final case class BloomPart(words: Array[Int], bits: Array[Long])
+        extends Part
+
+    /** Where and how the reduce task writes the sidecar. */
+    final case class Publish(target: Path, conf: SerializableHadoopConf,
+        colsEnc: Array[String], m: Int, k: Int)
+
+    /** A decoded absolute path made RELATIVE to the data dir named
+      * `dataName` — a bare name for a flat layout, `p=a/part-….parquet`
+      * under partitionBy (basenames collide across partition subdirs,
+      * and a reader needs the subdir to rebuild the path). */
+    def relName(path: String, dataName: String): String = {
+      val i = path.indexOf(s"/$dataName/")
+      require(i >= 0, s"index pass: $path is not under data dir $dataName")
+      path.substring(i + dataName.length + 2)
+    }
+
+    /** Fold one scan task's rows `(file, ordinals…, positions…)` per
+      * file. A task reads its files one after another, so a partial is
+      * flushed whenever the file name changes; the name is decoded once
+      * per flush, never per row. */
+    def fold(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+        dataName: String, nStats: Int, nBloom: Int, k: Int, m: Int)
+        : Iterator[((Int, String), Part)] = {
+      val out = collection.mutable.ArrayBuffer.empty[((Int, String), Part)]
+      val words = Array.fill(nBloom)(new Array[Long](m / 64))
+      val lo = new Array[Long](nStats)
+      val hi = new Array[Long](nStats)
+      val nonNull = new Array[Long](nStats)
+      var file: org.apache.spark.unsafe.types.UTF8String = null
+      var n = 0L
+      def flush(): Unit = if (file != null) {
+        val f = relName(new java.net.URI(file.toString).getPath, dataName)
+        out += (((-1, f), StatsPart(n, lo.clone(), hi.clone(), nonNull.clone())))
+        var ci = 0
+        while (ci < nBloom) {
+          val ws = words(ci)
+          val set = ws.indices.filter(ws(_) != 0L).toArray
+          out += (((ci, f), BloomPart(set, set.map(ws(_)))))
+          java.util.Arrays.fill(ws, 0L)
+          ci += 1
         }
-        val rows = r.getAs[Long]("__rows")
-        FileStats(dec(r.getAs[String]("__file")), rows,
-          statsCols.map(c => longOr(s"__min_${c._1}", Long.MaxValue)),
-          statsCols.map(c => longOr(s"__max_${c._1}", Long.MinValue)),
-          statsCols.map(c => rows - r.getAs[Long](s"__cnt_${c._1}")))
       }
-    // a ZERO-row file never surfaces through the groupBy (no rows, no
-    // group) but it IS part of the version — record it with the empty
-    // range so the stats line covers the file set EXACTLY. Consumers
-    // that demand set-equal coverage (the metadata-only aggregate
-    // pushdown) would otherwise refuse a layout whose hash repartition
-    // left an empty task, and band pruning correctly skips it (an
-    // empty file matches no predicate). inputFiles serves URI-encoded
-    // strings exactly like input_file_name — decode them the same way,
-    // so both sides land in the raw on-disk form the covered entries
-    // now record.
-    val seen = covered.map(_.file).toSet
-    val empties = df.inputFiles.toSeq
-      .map(_.replaceFirst(
-        "^.*?/" + java.util.regex.Pattern.quote(dataName) + "/", ""))
-      .map(dec)
-      .filterNot(seen)
-      .map(f => FileStats(f, 0L,
-        statsCols.map(_ => Long.MaxValue),
-        statsCols.map(_ => Long.MinValue),
-        statsCols.map(_ => 0L)))
-    TableStats(statsCols.map(_._1), (covered ++ empties).sortBy(_.file))
+      rows.foreach { r =>
+        val f = r.getUTF8String(0)
+        if (file == null || f != file) {
+          flush()
+          file = f.clone()
+          n = 0L
+          java.util.Arrays.fill(lo, Long.MaxValue)
+          java.util.Arrays.fill(hi, Long.MinValue)
+          java.util.Arrays.fill(nonNull, 0L)
+        }
+        n += 1
+        var i = 0
+        while (i < nStats) {
+          if (!r.isNullAt(1 + i)) {
+            val v = r.getLong(1 + i)
+            if (v < lo(i)) lo(i) = v
+            if (v > hi(i)) hi(i) = v
+            nonNull(i) += 1
+          }
+          i += 1
+        }
+        var ci = 0
+        while (ci < nBloom) {
+          val base = 1 + nStats + ci * k
+          if (!r.isNullAt(base)) {
+            val ws = words(ci)
+            var s = 0
+            while (s < k) {
+              val p = r.getLong(base + s)
+              ws((p >>> 6).toInt) |= 1L << (p & 63)
+              s += 1
+            }
+          }
+          ci += 1
+        }
+      }
+      flush()
+      out.iterator
+    }
+
+    private val hexDigits = "0123456789abcdef".toCharArray
+
+    /** The single reduce task. `parts` arrive sorted by (section, file);
+      * `files` is the driver's sorted listing with footer row counts.
+      * Stats: min/max/sum over a file's partials — a file no row named
+      * (zero rows) keeps the EMPTY range, min=MaxValue/max=MinValue,
+      * which intersects no band (so does an all-null column: null never
+      * matches a band predicate), an unmistakable sentinel rather than
+      * a fabricated 0. Sidecar: per section, per file in listing order,
+      * one bit array ORed from the file's partials, written as hex. */
+    def reduce(parts: Iterator[((Int, String), Part)],
+        files: Array[(String, Long)], nStats: Int,
+        publish: Option[Publish]): Iterator[FileStats] = {
+      val it = parts.buffered
+      val keyOrd = implicitly[Ordering[(Int, String)]]
+      // every partial of (sec, f); one keyed below it names a file the
+      // listing lacks and is refused, never skipped
+      def partsOf(sec: Int, f: String): Iterator[Part] = {
+        require(!(it.hasNext && keyOrd.lt(it.head._1, (sec, f))),
+          s"index pass: scanned file ${it.head._1._2} is not in the " +
+            "data dir's listing")
+        new Iterator[Part] {
+          def hasNext: Boolean = it.hasNext && it.head._1 == ((sec, f))
+          def next(): Part = it.next()._2
+        }
+      }
+      val stats = files.map { case (f, footerRows) =>
+        var rows = 0L
+        val lo = Array.fill(nStats)(Long.MaxValue)
+        val hi = Array.fill(nStats)(Long.MinValue)
+        val nonNull = new Array[Long](nStats)
+        partsOf(-1, f).foreach { case StatsPart(r, l, h, c) =>
+          rows += r
+          var i = 0
+          while (i < nStats) {
+            lo(i) = math.min(lo(i), l(i))
+            hi(i) = math.max(hi(i), h(i))
+            nonNull(i) += c(i)
+            i += 1
+          }
+        }
+        require(rows == footerRows,
+          s"index pass: scanned $rows rows of $f, its footer says $footerRows")
+        FileStats(f, rows, lo.toSeq, hi.toSeq, nonNull.toSeq.map(rows - _))
+      }
+      publish.foreach { case Publish(target, conf, colsEnc, m, k) =>
+        val fs = target.getFileSystem(conf.conf)
+        // ATOMIC publish: stream into an attempt-unique temp, then
+        // rename into place. Writing the landing path directly would let
+        // a task retry or speculative duplicate racing the winner — or
+        // any reader arriving inside the write window — observe a
+        // TRUNCATED sidecar, whose missing file lines decode as Bloom
+        // false negatives that silently drop rows from pruned reads.
+        // With temp + rename, attempts never interleave (each owns its
+        // temp), the rename is all-or-nothing, and last-complete-writer-
+        // wins is correct because every attempt writes identical bytes.
+        val tmp = new Path(target.getParent,
+          s"._bloomtmp_${java.util.UUID.randomUUID()}")
+        val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+          fs.create(tmp, true), java.nio.charset.StandardCharsets.UTF_8),
+          1 << 20)
+        val bits = new Array[Long](m / 64)
+        val line = new Array[Char](m / 4) // 16 hex digits per word
+        try colsEnc.indices.foreach { ci =>
+          w.write(s"${colsEnc(ci)}|$m|$k\n")
+          files.foreach { case (f, _) =>
+            java.util.Arrays.fill(bits, 0L)
+            partsOf(ci, f).foreach { case BloomPart(ws, bs) =>
+              var j = 0
+              while (j < ws.length) { bits(ws(j)) |= bs(j); j += 1 }
+            }
+            var wi = 0
+            while (wi < bits.length) {
+              var l = bits(wi)
+              var j = wi * 16 + 15
+              while (j >= wi * 16) {
+                line(j) = hexDigits((l & 15L).toInt); l >>>= 4; j -= 1
+              }
+              wi += 1
+            }
+            w.write(urlEnc(f))
+            w.write('|')
+            w.write(line)
+            w.write('\n')
+          }
+        } finally w.close()
+        replaceAtomic(fs, tmp, target)
+      }
+      require(!it.hasNext, s"index pass: scanned file ${it.head._1._2} " +
+        "is not in the data dir's listing")
+      if (nStats == 0) Iterator.empty else stats.iterator
+    }
   }
 
   /** The log-skipping read: resolve version `v`'s data files whose
@@ -1950,20 +2134,12 @@ object GraftTable {
     val w = effDf.write.mode("errorifexists")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(s"$dir/$data")
-    val st =
-      if (effStatsCols.isEmpty) None
-      else Some(computeStats(spark, s"$dir/$data", effStatsCols))
     // the Bloom sidecar is written INTO the data dir (underscore prefix
     // keeps it invisible to every parquet scan) so it travels with the
     // files it describes — through clones, retention, and data= renames;
-    // built and written EXECUTOR-side (buildBloomSidecar), one section
-    // per indexed column; m sized from the stats just computed over the
-    // same dir when available (one counting job saved per commit)
-    val effBloom = (bloomCol.toSeq ++ bloomCols).distinct
-    val bl =
-      if (effBloom.isEmpty) None
-      else Some(bloomHeader(buildBloomSidecar(spark, s"$dir/$data", effBloom,
-        knownMaxRowsPerFile = maxRowsOf(st))))
+    // stats and sidecar come out of ONE pass over the written files
+    val (st, bl) = indexDataDir(spark, s"$dir/$data", effDf.schema,
+      effStatsCols, (bloomCol.toSeq ++ bloomCols).distinct)
     commit(fs, dir, v, metadata, retain, prefix, dataDir = Some(data),
       stats = st, schema = Some(schemaEncode(df.schema)),
       partBy =
@@ -3447,17 +3623,11 @@ object GraftTable {
     val added = s"$prefix${cur0.map(_._1 + 1).getOrElse(0)}_" +
       java.util.UUID.randomUUID().toString.take(8)
     df.write.mode("errorifexists").parquet(s"$dir/$added")
-    val newStats =
-      if (effStats.isEmpty) None
-      else Some(computeStats(spark, s"$dir/$added", effStats))
-    // the appended dir gets its OWN sidecar (sized to its own files —
-    // each sidecar self-describes m/k per section, so chain dirs may
-    // differ); staged once, reused verbatim on a lost race
-    val newBloom =
-      if (effBloom.isEmpty) None
-      else Some(bloomHeader(
-        buildBloomSidecar(spark, s"$dir/$added", effBloom,
-          knownMaxRowsPerFile = maxRowsOf(newStats))))
+    // the appended dir gets its OWN stats and sidecar (sized to its own
+    // files — each sidecar self-describes m/k per section, so chain dirs
+    // may differ); staged once, reused verbatim on a lost race
+    val (newStats, newBloom) =
+      indexDataDir(spark, s"$dir/$added", df.schema, effStats, effBloom)
     retryOnConflict(maxAttempts) { attempt =>
       // the staged dir is reused VERBATIM across attempts (an append
       // reads no snapshot, so there is nothing to re-execute) — only
@@ -3648,7 +3818,7 @@ object GraftTable {
         // snapshot would silently commit an index-less version onto a
         // freshly indexed chain
         val (newStats, statsEncDecl, newBloom) =
-          dsv2IndexExtension(spark, dir, effStaged, cur.map(_._2))
+          dsv2IndexExtension(spark, dir, effStaged, schema, cur.map(_._2))
         // a bucket-declared target validates the STAGED rows against
         // the invariant before any version mints (append: old files
         // were validated at their own commits; overwrite: the staged
@@ -3733,7 +3903,9 @@ object GraftTable {
     * always reflected. Returns (staged dir's stats, statenc declaration
     * to carry, staged dir's bloom header). */
   private def dsv2IndexExtension(spark: SparkSession,
-      dir: String, staged: String, curHeaders: Option[Map[String, String]])
+      dir: String, staged: String,
+      schema: org.apache.spark.sql.types.StructType,
+      curHeaders: Option[Map[String, String]])
       : (Option[TableStats], Seq[(String, String)], Option[String]) =
     curHeaders match {
       case Some(h) =>
@@ -3742,15 +3914,9 @@ object GraftTable {
           if (!h.contains("stats")) Nil
           else StatsEnc.validateAndMerge(spark, Nil, encDecl)
         val effBloom = h.get("bloom").map(bloomColsOf).getOrElse(Nil)
-        val stagedStats =
-          if (effStats.isEmpty) None
-          else Some(computeStats(spark, s"$dir/$staged", effStats))
-        (stagedStats,
-          if (effStats.isEmpty) Nil else encDecl,
-          if (effBloom.isEmpty) None
-          else Some(bloomHeader(
-            buildBloomSidecar(spark, s"$dir/$staged", effBloom,
-              knownMaxRowsPerFile = maxRowsOf(stagedStats)))))
+        val (stagedStats, stagedBloom) =
+          indexDataDir(spark, s"$dir/$staged", schema, effStats, effBloom)
+        (stagedStats, if (effStats.isEmpty) Nil else encDecl, stagedBloom)
       case None => (None, Nil, None)
     }
 
@@ -4075,7 +4241,7 @@ object GraftTable {
         // streamed versions stay band/Bloom-skippable (same
         // self-described, per-attempt derivation as the batch door)
         val (newStats, statsEncDecl, newBloom) =
-          dsv2IndexExtension(spark, dir, staged, cur.map(_._2))
+          dsv2IndexExtension(spark, dir, staged, schema, cur.map(_._2))
         val carried = carriedConstraints(cur)
         if (carried.nonEmpty)
           enforceConstraints(stagedDf, carried, "append",
@@ -4503,7 +4669,7 @@ object GraftTable {
         .map { st => fs.delete(st.getPath, false)
           s"manifest/${st.getPath.getName}" }
       catch { case _: java.io.IOException => Seq.empty }
-    // Bloom-temp litter: a buildBloomSidecar attempt that crashed
+    // Bloom-temp litter: an indexDataDir attempt that crashed
     // between its temp create and the atomic rename (or a speculative
     // loser) leaks `._bloomtmp_<uuid>` inside a LIVE data dir —
     // invisible to scans (dot prefix) but garbage nonetheless, and the
@@ -4823,135 +4989,9 @@ object GraftTable {
     }
   }
 
-  /** Distributed Bloom build with an EXECUTOR-SIDE sidecar write: ONE
-    * pass over the just-written files per indexed column — per row, k
-    * probe positions from `xxhash64(col, seed)`; per (file, word) a
-    * `bit_or` of the shifted bits; per file a sorted sparse word list —
-    * and the sidecar streams out of the final single task directly.
-    * The DRIVER never materializes a word row: at 10⁴ files × m=2²⁴
-    * the former collect() held gigabytes of filter words in driver
-    * memory for the initial load; here the driver handles only the
-    * file-NAME list (for the all-null-file entries) and the returned
-    * per-column (col, m, k) metadata that goes into the bloom= header.
-    *
-    * Multi-column: one pass and one sidecar SECTION per column (see
-    * `TableBloom.decodeAll`), so a table can serve point lookups on
-    * several keys. `m` is sized per column from the LARGEST file's row
-    * count at ~12 bits/key (k=4 → ~0.6% false positives) — one skewed
-    * file would otherwise saturate toward opening everything. Nulls
-    * probe nothing; an all-null file gets an empty filter every probe
-    * correctly skips. */
-  private def buildBloomSidecar(spark: SparkSession, dataPath: String,
-      bloomCols: Seq[String], bitsPerKey: Int = 12, k: Int = 4,
-      knownMaxRowsPerFile: Option[Long] = None)
-      : Seq[(String, Int, Int)] = {
-    import org.apache.spark.sql.functions._
-    require(bloomCols.nonEmpty)
-    val df = spark.read.parquet(dataPath)
-    val dataName = new Path(dataPath).getName
-    val relFile = regexp_replace(input_file_name(),
-      "^.*?/" + java.util.regex.Pattern.quote(dataName) + "/", "")
-    // one cheap column-pruned counting pass, shared by every column —
-    // SKIPPED when the caller just computed stats over the same dir
-    // (computeStats counts every row of every file, the identical
-    // quantity; m only SIZES the filter and is recorded per section in
-    // the sidecar, so the probe path is indifferent to where the count
-    // came from). One Spark job saved per stats+bloom commit (r22).
-    val rowsPerFile = math.max(1L, knownMaxRowsPerFile.getOrElse(
-      df.groupBy(relFile.as("__f")).count()
-        .agg(max(col("count"))).collect()(0).getLong(0))) // 1 row
-    val m = math.min(1L << 24,
-      math.max(1024L, ((rowsPerFile * bitsPerKey + 63) / 64) * 64)).toInt
-    // complete file list — NAMES only (a file with no non-null value
-    // still gets its correctly-empty entry), never filter words
-    val relPattern = ("^.*?/" +
-      java.util.regex.Pattern.quote(dataName) + "/").r
-    val allFiles = df.inputFiles.toSeq
-      .map(u => relPattern.replaceFirstIn(u, "")).sorted
-    import spark.implicits._
-    val filesDf = allFiles.toDF("__file")
-    // per (column, file): the sorted sparse (word, bits) list — built
-    // distributed, UNIONED across columns, never collected
-    val perCol = bloomCols.zipWithIndex.map { case (c, ci) =>
-      val words = df.select(relFile.as("__file"), col(c).as("__x"))
-        .where(col("__x").isNotNull)
-        .select(col("__file"), explode(array((1 to k).map(s =>
-          pmod(xxhash64(col("__x"), lit(s)), lit(m.toLong))): _*)).as("__p"))
-        .groupBy(col("__file"), (col("__p") / 64).cast("int").as("__w"))
-        .agg(expr("bit_or(shiftleft(1L, cast(__p % 64 as int)))").as("__bits"))
-        .groupBy(col("__file"))
-        .agg(sort_array(collect_list(struct(col("__w"), col("__bits"))))
-          .as("__ws"))
-      filesDf.join(words, Seq("__file"), "left")
-        .select(lit(ci).as("__ci"), col("__file"), col("__ws"))
-    }.reduce(_ unionByName _)
-    // qualify the target on the DRIVER (the task needs no default-FS
-    // context), ship the conf the standard serializable way
-    val sidecar = new Path(s"$dataPath/$bloomSidecarName")
-    val target = sidecar
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(sidecar)
-    val confSer =
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val colsEnc = bloomCols.map(urlEnc)
-    val (mL, kL) = (m, k)
-    // ONE writing task, rows streaming through in section order — the
-    // sidecar is written where the words live, not where the driver is
-    perCol.repartition(1).sortWithinPartitions(col("__ci"), col("__file"))
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        val fs = target.getFileSystem(confSer.conf)
-        // ATOMIC publish: stream into an attempt-unique temp, then
-        // rename into place. The former `fs.create(target, true)` wrote
-        // the landing path directly, so a task retry or speculative
-        // duplicate racing the winner — or any reader arriving inside
-        // the write window — could observe a TRUNCATED sidecar, whose
-        // missing file lines decode as Bloom false negatives that
-        // silently drop rows from pruned reads. With temp + rename,
-        // attempts never interleave (each owns its temp), the rename is
-        // all-or-nothing, and last-complete-writer-wins is correct
-        // because every attempt writes identical bytes.
-        val tmp = new Path(target.getParent,
-          s"._bloomtmp_${java.util.UUID.randomUUID()}")
-        val out = fs.create(tmp, true)
-        val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-          out, java.nio.charset.StandardCharsets.UTF_8), 1 << 20)
-        try {
-          var curCi = -1
-          it.foreach { r =>
-            val ci = r.getAs[Int]("__ci")
-            if (ci != curCi) {
-              w.write(s"${colsEnc(ci)}|$mL|$kL\n"); curCi = ci
-            }
-            val bits = new Array[Long](mL / 64)
-            val ws = r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("__ws")
-            if (ws != null) ws.foreach { wr =>
-              bits(wr.getAs[Int](0)) = wr.getAs[Long](1)
-            }
-            w.write(urlEnc(r.getAs[String]("__file")))
-            w.write('|')
-            bits.foreach(l => w.write(f"$l%016x"))
-            w.write('\n')
-          }
-        } finally w.close()
-        replaceAtomic(fs, tmp, target)
-      }
-    // POST-BUILD READ-BACK GATE: decode the published sidecar and
-    // require exactly the expected shape — one section per indexed
-    // column in declaration order, every data file present in every
-    // section, full-width bit arrays — BEFORE the caller mints a
-    // version whose bloom= header would vouch for it. An incomplete or
-    // torn sidecar is the one defect the probe path cannot detect (a
-    // missing file line reads as "provably absent" = a silent false
-    // negative), so it must be impossible to commit one.
-    auditBloomSidecar(
-      target.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      target, bloomCols, m, k, allFiles.toSet)
-    bloomCols.map(c => (c, m, k))
-  }
-
   /** The read-back audit itself: decode the published sidecar and
     * require exactly the expected shape, throwing (so no version mints)
-    * on any deviation. Factored out of `buildBloomSidecar` so the
+    * on any deviation. Factored out of `indexDataDir` so the
     * torn-file refusals are directly testable. */
   private[graft] def auditBloomSidecar(fs: FileSystem, target: Path,
       bloomCols: Seq[String], m: Int, k: Int,
@@ -5332,10 +5372,10 @@ object GraftTable {
 
     // spanning stats: the head's entries carry over UNREAD (their files
     // are untouched — that is the whole point); the folded dir's are
-    // computed fresh and re-keyed table-relative
-    val freshStats =
-      if (effStats.isEmpty) None
-      else Some(computeStats(spark, s"$dir/$tDir", effStats))
+    // computed fresh, in the same pass as its sidecar, and re-keyed
+    // table-relative
+    val (freshStats, bl) =
+      indexDataDir(spark, s"$dir/$tDir", folded.schema, effStats, effBloom)
     val mergedStats = freshStats.map { fresh =>
       val mine = fresh.files.map(f => f.copy(file = s"$tDir/${f.file}"))
       val prev = TableStats.decode(h.getOrElse("stats", sys.error(
@@ -5349,13 +5389,6 @@ object GraftTable {
       val headEntries = prev.files.filter(_.file.startsWith(s"$head/"))
       TableStats(fresh.cols, headEntries ++ mine)
     }
-    val bl =
-      if (effBloom.isEmpty) None
-      else Some(bloomHeader(buildBloomSidecar(spark, s"$dir/$tDir",
-        effBloom,
-        // freshStats covers EXACTLY the folded dir (pre-re-keying),
-        // the same files the sidecar describes
-        knownMaxRowsPerFile = maxRowsOf(freshStats))))
     commit(fs, dir, v, metadata, prefix = prefix,
       dataDir = Some(s"$head,$tDir"), stats = mergedStats,
       schema = h.get("schema"), prevTs = prevTsOf(Some((c, h))),
