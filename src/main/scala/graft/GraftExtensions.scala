@@ -17,6 +17,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // auto-rewrite abs(x−y)<=W theta joins into bucketed equi-joins
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinBucketing())
+    // CAST(double AS DECIMAL(p<=18, s>=0)) on the long-backed Decimal
+    // path, bit-identical to Spark's BigDecimal cast
+    ext.injectOptimizerRule(_ => graft.plans.ExactDecimalCast)
     // plan the custom per-key top-k logical node (two-level exec);
     // Graft.topKPerKey also injects this per-session via
     // experimental.extraStrategies for sessions built without extensions

@@ -2016,6 +2016,34 @@ object GraftTable {
     else readSmallFile(fs, p).split("\n").filter(_.nonEmpty).toSet
   }
 
+  /** Tombstones a pdv sidecar holds for one data file: the parquet
+    * FOOTER row counts of its `__file=` dir — metadata only, no Spark
+    * job. Sidecar rows are distinct by construction (every writer
+    * `distinct()`s or unions disjoint sets), so footer rows ==
+    * tombstones; a file with no dir has none. */
+  private def sidecarTombstones(fs: FileSystem, sidecar: String,
+      file: String, conf: org.apache.hadoop.conf.Configuration): Long = {
+    val p = new Path(sidecar, "__file=" + org.apache.spark.sql.catalyst
+      .catalog.ExternalCatalogUtils.escapePathName(file))
+    if (!fs.exists(p)) 0L
+    else fs.listStatus(p).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.map(footerRowCount(_, conf)).sum
+  }
+
+  /** Per-file tombstone counts of a whole pdv sidecar: every `__file=`
+    * dir through `sidecarTombstones`, footers read on the bounded pool.
+    * A matched-nothing sidecar has no such dir and yields no entry. */
+  private def sidecarTombstoneCounts(fs: FileSystem, sidecar: String,
+      conf: org.apache.hadoop.conf.Configuration): Map[String, Long] = {
+    val files = fs.listStatus(new Path(sidecar)).toSeq
+      .map(_.getPath.getName).filter(_.startsWith("__file="))
+      .map(n => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(n.stripPrefix("__file=")))
+    mapPar(files)(f => f -> sidecarTombstones(fs, sidecar, f, conf)).toMap
+  }
+
   /** Chain-dir BASENAME — the dir identity scoped tombstones record.
     * A shallow clone re-points entries through `../src/<dir>`, so the
     * basename (uuid-suffixed, unique within a chain) is the only name
@@ -2505,42 +2533,18 @@ object GraftTable {
     // what was written, marking a file fully deleted while the sidecar
     // holds fewer positions — the read path would then drop live rows.
     // Reading back what was actually committed is exact by construction.
-    // One bounded read of tombstones only; a matched-nothing sidecar has
-    // no __file= dirs (parquet cannot infer its schema), so guard first.
-    val deadCounts: Map[String, Long] =
-      if (!fs.listStatus(new Path(s"$dir/$pdvDir"))
-          .exists(_.getPath.getName.startsWith("__file="))) Map.empty
-      // explicit schema (fixed sidecar layout): skips the 1-task schema
-      // inference job every delete commit otherwise pays (round-21)
-      else spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__pos",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("__file",
-            org.apache.spark.sql.types.StringType))))
-        .parquet(s"$dir/$pdvDir")
-        .select(col("__file").cast("string").as("__file"))
-        .groupBy(col("__file")).count().collect()
-        .map(r => (r.getString(0), r.getLong(1))).toMap
+    // Both the new and the previous per-file counts are FOOTER metadata
+    // of the sidecars' __file= dirs (`sidecarTombstones`), never a
+    // Spark aggregation over the cumulative sidecar.
+    val conf = spark.sessionState.newHadoopConf()
+    val deadCounts = sidecarTombstoneCounts(fs, s"$dir/$pdvDir", conf)
     // DELTA-restricted reconciliation (round-20 advice): a file can only
     // become NEWLY fully-dead if this commit grew its tombstone count,
     // so footer-check only files whose cumulative count moved vs the
     // previous sidecar; prior _skips carry forward verbatim (files are
-    // immutable). Round-22 (r21 advice): the PREVIOUS per-file counts
-    // come from parquet FOOTER metadata of the prev sidecar's __file=
-    // partitions (sidecar rows are distinct by construction, so footer
-    // rows == tombstone count — the same equivalence the update door's
-    // reconciliation already stands on) instead of a whole-sidecar
-    // Spark aggregation per commit: a long MoR chain no longer pays an
-    // O(all ever-tombstoned rows) job per delete.
-    val conf = spark.sessionState.newHadoopConf()
+    // immutable).
     def prevTombstones(file: String): Long = hdrs.get("pdv") match {
-      case Some(pd) =>
-        val p = new Path(s"$dir/$pd/__file=$file")
-        if (!fs.exists(p)) 0L
-        else fs.listStatus(p).toSeq.filter { st =>
-          val n = st.getPath.getName
-          st.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }.map(footerRowCount(_, conf)).sum
+      case Some(pd) => sidecarTombstones(fs, s"$dir/$pd", file, conf)
       case None => 0L
     }
     // a file whose tombstone count equals its footer row count is fully
@@ -2830,21 +2834,8 @@ object GraftTable {
     replacements.coalesce(replTasks).write.mode("errorifexists")
       .parquet(s"$dir/$repl")
     val conf = spark.sessionState.newHadoopConf()
-    def footerRows(sts: Seq[org.apache.hadoop.fs.FileStatus]): Long =
-      sts.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
-    def dataFiles(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
     def prevTombstones(file: String): Long = prevSidecar match {
-      case Some(pd) => footerRows(dataFiles(new Path(s"$dir/$pd/__file=$file")))
+      case Some(pd) => sidecarTombstones(fs, s"$dir/$pd", file, conf)
       case None => 0L
     }
     // footer reads through the bounded pool (round-22, VERDICT r21
@@ -2859,7 +2850,7 @@ object GraftTable {
     }
     val newlyDead = mapPar(touchedFiles) { st =>
       val n = st.getPath.getName
-      if (freshCounts(n) + prevTombstones(n) == footerRows(Seq(st))) Some(n)
+      if (freshCounts(n) + prevTombstones(n) == footerRowCount(st, conf)) Some(n)
       else None
     }.flatten
     val skipNames = (skips ++ newlyDead).toSeq.sorted

@@ -346,4 +346,58 @@ class PlanAuditSpec extends SparkSpec {
     assert(windows <= 2, s"expected one logical window (<=2 mentions), got $windows:\n" +
       p.take(2000))
   }
+
+  private def isDoubleToDecimalCast(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
+    e match {
+      case c: org.apache.spark.sql.catalyst.expressions.Cast =>
+        c.child.dataType == org.apache.spark.sql.types.DoubleType &&
+          c.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType]
+      case _ => false
+    }
+
+  test("agg_group_pricing casts its money on the long-backed path, with the same rows, jobs and stages") {
+    val df = SparkEntry.queries("agg_group_pricing")(spark, sf)
+    val exprs = df.queryExecution.optimizedPlan.flatMap(_.expressions)
+    assert(exprs.exists(_.exists(_.isInstanceOf[graft.expr.ExactDoubleToDecimal])))
+    assert(!exprs.exists(_.exists(isDoubleToDecimalCast)),
+      df.queryExecution.optimizedPlan.toString)
+    // the same query with the rule excluded through Spark's own switch
+    var rows: Seq[org.apache.spark.sql.Row] = Nil
+    val withRule = jobsAndStages { rows = df.collect().toSeq }
+    val key = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(key, graft.plans.ExactDecimalCast.ruleName)
+    try {
+      val plain = SparkEntry.queries("agg_group_pricing")(spark, sf)
+      assert(plain.queryExecution.optimizedPlan.flatMap(_.expressions)
+        .exists(_.exists(isDoubleToDecimalCast)))
+      var plainRows: Seq[org.apache.spark.sql.Row] = Nil
+      val withoutRule = jobsAndStages { plainRows = plain.collect().toSeq }
+      assert(rows == plainRows)
+      assert(withRule == withoutRule, s"(jobs, stages) $withRule vs $withoutRule")
+    } finally spark.conf.unset(key)
+  }
+
+  test("ExactDecimalCast leaves wide targets and float, string and decimal sources to Spark's cast") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val in = spark.range(0, 100, 1, 2).select(
+      (col("id") / 4).as("d"), (col("id") / 4).cast(FloatType).as("f"),
+      (col("id") / 4).cast(StringType).as("s"),
+      (col("id") / 4).cast(DecimalType(20, 3)).as("m"))
+      .repartition(2)
+    val q = in.select(
+      col("d").cast(DecimalType(20, 2)), col("f").cast(DecimalType(12, 2)),
+      col("s").cast(DecimalType(12, 2)), col("m").cast(DecimalType(12, 2)),
+      col("d").cast(DecimalType(12, 2)))
+    val top = q.queryExecution.optimizedPlan.expressions
+    val kept = top.flatMap(_.collect {
+      case c: org.apache.spark.sql.catalyst.expressions.Cast
+          if c.dataType.isInstanceOf[DecimalType] => c.child.dataType
+    })
+    assert(kept.map(_.typeName).sorted ==
+      Seq("decimal(20,3)", "double", "float", "string"), top)
+    assert(top.flatMap(_.collect {
+      case e: graft.expr.ExactDoubleToDecimal => e.dataType
+    }) == Seq(DecimalType(12, 2)), top)
+  }
 }

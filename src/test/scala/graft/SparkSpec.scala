@@ -8,6 +8,25 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** (jobs, stages) that `f` runs, counted by a SparkListener. */
+  def jobsAndStages(f: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler._
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
+        stages.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try { f; org.apache.spark.graft.ListenerDrain(sc) }
+    finally sc.removeSparkListener(listener)
+    (jobs.get, stages.get)
+  }
 }
 
 object SparkSpec {
